@@ -15,9 +15,10 @@ Local smoke:
         --output /tmp/idx_out --segments 4
 
 The job is checkpoint-resumable: rerunning with the same --output skips
-segments whose lineage rows are committed (SegmentedIndexWriter), then
-(re)runs the term-sharded merge. Metrics (docs/sec, postings/sec, bytes,
-per-segment lineage) print as one JSON line and persist in lineage.json.
+segments already committed to the output's segments.json manifest
+(SegmentedIndexWriter), then (re)runs the term-sharded merge. Metrics
+(docs/sec, postings/sec, bytes) print as one JSON line; the per-segment
+rows persist in segments.json.
 """
 
 from __future__ import annotations

@@ -369,7 +369,6 @@ def build_index(
     id_col: str = "doc_id",
     analyzer: StandardAnalyzer | None = None,
     with_positions: bool = True,
-    persist: bool = True,
     fields: list[str] | dict[str, StandardAnalyzer] | None = None,
 ) -> InvertedIndex:
     """Tokenize + invert a corpus DataFrame into an InvertedIndex.
@@ -387,8 +386,8 @@ def build_index(
 
     `with_positions=False` mirrors IndexOptions.DOCS_AND_FREQS (drops the
     positions array; phrase queries then unavailable) — FieldInfo.cs:316-356.
-    `persist` caches postings (MEMORY_AND_DISK) since three downstream
-    tables derive from it.
+    Postings are cached (MEMORY_AND_DISK) since three downstream tables
+    derive from them; the caller releases them with `unpersist()`.
     """
     analyzer = analyzer or StandardAnalyzer()
     if fields is None:
@@ -423,9 +422,7 @@ def build_index(
         *[F.col(c).alias(c) for c in routing_cols],
     ).mapInArrow(
         _inverter_map(analyzers, "doc_id", with_positions, with_payloads), schema
-    )
-    if persist:
-        postings = postings.persist()
+    ).persist()
 
     # every (doc, field) gets a doclens row, even token-free ones:
     # dl=0, norm encodes 1/sqrt(0)=inf (missing-norms contract)

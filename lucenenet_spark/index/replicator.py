@@ -22,7 +22,6 @@ IncrementalIndexer manifest machinery as the master.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 from dataclasses import dataclass, field
@@ -30,6 +29,8 @@ from dataclasses import dataclass, field
 from lucenenet_spark.streaming.incremental import (
     IncrementalIndexer,
     SnapshotDeletionPolicy,
+    read_json,
+    write_json_atomic,
 )
 
 
@@ -142,10 +143,7 @@ class ReplicationClient:
         return os.path.join(self.replica_dir, "revision.json")
 
     def _synced_revision(self) -> str | None:
-        if os.path.exists(self._rev_path):
-            with open(self._rev_path) as f:
-                return json.load(f)["id"]
-        return None
+        return read_json(self._rev_path, {}).get("id")
 
     def update_now(self) -> bool:
         """Sync to the currently published revision. Returns False when
@@ -163,12 +161,9 @@ class ReplicationClient:
         # a key counts as already-replicated only when its CONTENT uid
         # matches — a rollback + batch-id replay can recreate a key with
         # different bytes, and key-presence alone would serve stale data
-        have_uids: dict[str, str] = {}
         manifest_path = os.path.join(self.replica_dir, "segments.json")
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                have_uids = {k: v.get("uid", "")
-                             for k, v in json.load(f).items()}
+        have_uids = {k: v.get("uid", "")
+                     for k, v in read_json(manifest_path, {}).items()}
         have_dirs = set(os.listdir(dst_root))
         # bucket the file manifest by segment once (not per-segment scans)
         by_seg: dict[str, list[tuple[str, int, str]]] = {k: [] for k in rev.keys}
@@ -192,15 +187,8 @@ class ReplicationClient:
             os.replace(tmp, final)
         # durable-first publish on the replica: manifest naming exactly
         # the revision's keys, then the revision marker, then cleanup
-        manifest_path = os.path.join(self.replica_dir, "segments.json")
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rev.segments_meta, f, indent=1)
-        os.replace(tmp, manifest_path)
-        tmp = self._rev_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"id": rev.id, "keys": list(rev.keys)}, f)
-        os.replace(tmp, self._rev_path)
+        write_json_atomic(manifest_path, rev.segments_meta)
+        write_json_atomic(self._rev_path, {"id": rev.id, "keys": list(rev.keys)})
         for k in set(os.listdir(dst_root)) - set(rev.keys):
             shutil.rmtree(os.path.join(dst_root, k), ignore_errors=True)
         return True

@@ -1,15 +1,18 @@
 """Segmented index construction: checkpoint-resumable, with per-segment
-lineage + throughput metrics, and a term-sharded merge.
+throughput metrics, and a term-sharded merge.
 
-Mirrors the reference's segment architecture (SURVEY.md §3.1):
+Mirrors the reference's segment architecture (SURVEY.md §3.1), where a bulk
+build and an NRT flush write segments the same way and differ only in how
+many they write and when they merge:
 - a *segment* is an immutable mini-index built from a disjoint slice of the
   corpus (reference: DocumentsWriterPerThread flush -> SegmentInfo;
-  src/Lucene.Net/Index/SegmentInfos.cs) — ours is a doc_id-range slice
-  written as parquet under segments/seg_XXXX/;
-- the *lineage table* plays segments_N + two-phase commit
-  (IndexWriter.cs:2310-2798): a segment is visible iff its lineage row with
-  status='committed' exists, and the row is written only after the segment's
-  parquet is fully flushed. Resume = skip committed segments
+  src/Lucene.Net/Index/SegmentInfos.cs) — ours is a doc_id-range slice,
+  flushed by `IncrementalIndexer.process_batch` as parquet under
+  segments/seg_XXXXXXXX/;
+- the indexer's ``segments.json`` plays segments_N + two-phase commit
+  (IndexWriter.cs:2310-2798): a segment is visible iff its row with
+  status='committed' exists, and the row is written only after the
+  segment's parquet is fully flushed. Resume = skip committed segments
   (north_rule: "resumable from checkpoint with per-partition lineage");
 - *merge* re-shards all segment postings by term (SegmentMerger.cs:89-148
   as a shuffle): because segments hold disjoint doc ranges, postings rows
@@ -18,23 +21,24 @@ Mirrors the reference's segment architecture (SURVEY.md §3.1):
   in a single reducer during the build, only during the final by-term
   sort where AQE handles residual skew.
 
-Metrics per segment (lineage row): docs, postings, bytes, wall sec,
-docs/sec, postings/sec — the rec/s reporting shape of the reference
-benchmark framework (Lucene.Net.Benchmark ByTask/Tasks/ReportTask.cs:56-57).
+Build metrics: docs, postings, bytes, wall sec, docs/sec, postings/sec —
+the rec/s reporting shape of the reference benchmark framework
+(Lucene.Net.Benchmark ByTask/Tasks/ReportTask.cs:56-57).
 """
 
 from __future__ import annotations
 
-import json
+import glob
 import os
-import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucenenet_spark.analysis.analyzers import StandardAnalyzer
-from lucenenet_spark.index.builder import InvertedIndex, build_index
+from lucenenet_spark.index.builder import InvertedIndex
+from lucenenet_spark.streaming.incremental import IncrementalIndexer, segment_key
 
 
 def _dir_bytes(path: str) -> int:
@@ -45,29 +49,21 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _parquet_rows(path: str) -> int:
+    """Row count of a parquet directory, from the file footers only."""
+    return sum(pq.read_metadata(f).num_rows for f in glob.glob(os.path.join(path, "*.parquet")))
+
+
 @dataclass
 class SegmentedIndexWriter:
-    """Builds an index as N doc-range segments with committed lineage."""
+    """Builds an index as N doc-range segments of an IncrementalIndexer."""
 
     out_dir: str
     num_segments: int = 8
     analyzer: StandardAnalyzer | None = None
 
-    @property
-    def lineage_path(self) -> str:
-        return os.path.join(self.out_dir, "lineage.json")
-
-    def _load_lineage(self) -> dict[str, dict]:
-        if os.path.exists(self.lineage_path):
-            with open(self.lineage_path) as f:
-                return json.load(f)
-        return {}
-
-    def _commit_lineage(self, lineage: dict[str, dict]) -> None:
-        tmp = self.lineage_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(lineage, f, indent=1)
-        os.replace(tmp, self.lineage_path)  # atomic commit (segments_N rename)
+    def _indexer(self, text_col: str = "text", id_col: str = "doc_id") -> IncrementalIndexer:
+        return IncrementalIndexer(self.out_dir, self.analyzer, text_col, id_col)
 
     # ------------------------------------------------------------------
     def build(
@@ -77,111 +73,54 @@ class SegmentedIndexWriter:
         id_col: str = "doc_id",
         fail_after: int | None = None,
     ) -> dict[str, dict]:
-        """Build all not-yet-committed segments; returns the lineage table.
+        """Build all not-yet-committed segments; returns the manifest rows.
 
         `fail_after` stops after that many newly built segments (test hook
         for crash/resume).
         """
-        os.makedirs(self.out_dir, exist_ok=True)
-        lineage = self._load_lineage()
+        ix = self._indexer(text_col, id_col)
+        done = set(ix.record())
         n_docs = corpus.count()
         seg_size = (n_docs + self.num_segments - 1) // self.num_segments
         built = 0
         for seg in range(self.num_segments):
-            key = f"seg_{seg:04d}"
-            if lineage.get(key, {}).get("status") == "committed":
+            if segment_key(seg) in done:
                 continue  # checkpoint-resume: already durable
             lo, hi = seg * seg_size, min((seg + 1) * seg_size, n_docs)
-            slice_df = corpus.filter((F.col(id_col) >= lo) & (F.col(id_col) < hi))
-            t0 = time.time()
-            idx = build_index(slice_df, text_col=text_col, id_col=id_col, analyzer=self.analyzer)
-            seg_dir = os.path.join(self.out_dir, "segments", key)
-            idx.postings.write.mode("overwrite").parquet(os.path.join(seg_dir, "postings"))
-            idx.doclens.write.mode("overwrite").parquet(os.path.join(seg_dir, "doclens"))
-            wall = time.time() - t0
-            n_seg_docs = idx.max_doc
-            n_postings = idx.postings.count()
-            nbytes = _dir_bytes(seg_dir)
-            lineage[key] = {
-                "status": "committed",
-                "doc_lo": lo,
-                "doc_hi": hi,
-                "docs": n_seg_docs,
-                "postings": n_postings,
-                "sum_ttf": idx.sum_ttf,
-                "fields": list(idx.fields),
-                "sum_ttf_by_field": idx.sum_ttf_by_field
-                or {idx.default_field: idx.sum_ttf},
-                "bytes": nbytes,
-                "wall_sec": round(wall, 4),
-                "docs_per_sec": round(n_seg_docs / wall, 2) if wall > 0 else None,
-                "postings_per_sec": round(n_postings / wall, 2) if wall > 0 else None,
-            }
-            self._commit_lineage(lineage)
+            ix.process_batch(corpus.filter((F.col(id_col) >= lo) & (F.col(id_col) < hi)), seg)
             built += 1
             if fail_after is not None and built >= fail_after:
                 break
-        return lineage
+        return ix._load_manifest()
 
     def is_complete(self) -> bool:
-        lineage = self._load_lineage()
-        return all(
-            lineage.get(f"seg_{s:04d}", {}).get("status") == "committed"
-            for s in range(self.num_segments)
-        )
+        done = set(self._indexer().record())
+        return all(segment_key(s) in done for s in range(self.num_segments))
 
     # ------------------------------------------------------------------
     def merge(self, spark: SparkSession, num_term_partitions: int = 8) -> InvertedIndex:
         """Term-sharded merge of all committed segments into the final index
         layout (SegmentMerger as one shuffle + re-aggregation)."""
         assert self.is_complete(), "cannot merge an incomplete build"
-        lineage = self._load_lineage()
-        seg_root = os.path.join(self.out_dir, "segments")
-        postings = spark.read.parquet(
-            *[os.path.join(seg_root, k, "postings") for k in sorted(lineage)]
-        )
-        doclens = spark.read.parquet(
-            *[os.path.join(seg_root, k, "doclens") for k in sorted(lineage)]
-        )
-        term_stats = postings.groupBy("field", "term").agg(
-            F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf")
-        )
-        max_doc = sum(v["docs"] for v in lineage.values())
-        sum_ttf = sum(v["sum_ttf"] for v in lineage.values())
-        by_field: dict[str, int] = {}
-        fields: list[str] = []
-        for v in lineage.values():
-            for f, s in v.get("sum_ttf_by_field", {"text": v["sum_ttf"]}).items():
-                by_field[f] = by_field.get(f, 0) + int(s)
-            for f in v.get("fields", ["text"]):
-                if f not in fields:
-                    fields.append(f)
-        idx = InvertedIndex(
-            postings=postings,
-            doclens=doclens,
-            term_stats=term_stats,
-            max_doc=max_doc,
-            sum_ttf=sum_ttf,
-            analyzer=self.analyzer or StandardAnalyzer(),
-            fields=tuple(fields) or ("text",),
-            sum_ttf_by_field=by_field or None,
-        )
+        idx = self._indexer().refresh(spark).index
         final_dir = os.path.join(self.out_dir, "index")
         idx.save(final_dir, num_term_partitions=num_term_partitions)
         return InvertedIndex.load(spark, final_dir, analyzer=idx.analyzer)
 
     def metrics(self) -> dict:
-        """Aggregate build metrics from lineage (docs/sec, postings/sec, bytes)."""
-        lineage = self._load_lineage()
-        rows = [v for v in lineage.values() if v.get("status") == "committed"]
-        wall = sum(r["wall_sec"] for r in rows)
-        docs = sum(r["docs"] for r in rows)
-        postings = sum(r["postings"] for r in rows)
+        """Aggregate build metrics (docs/sec, postings/sec, bytes): docs and
+        wall time from the manifest, bytes and postings from the segment
+        directories."""
+        rows = self._indexer()._load_manifest()
+        seg_root = os.path.join(self.out_dir, "segments")
+        wall = sum(r["wall_sec"] for r in rows.values())
+        docs = sum(r["docs"] for r in rows.values())
+        postings = sum(_parquet_rows(os.path.join(seg_root, k, "postings")) for k in rows)
         return {
             "segments": len(rows),
             "docs": docs,
             "postings": postings,
-            "bytes": sum(r["bytes"] for r in rows),
+            "bytes": sum(_dir_bytes(os.path.join(seg_root, k)) for k in rows),
             "wall_sec": round(wall, 4),
             "docs_per_sec": round(docs / wall, 2) if wall else None,
             "postings_per_sec": round(postings / wall, 2) if wall else None,

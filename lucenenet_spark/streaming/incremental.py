@@ -1,4 +1,4 @@
-"""Near-real-time incremental indexing via Structured Streaming.
+"""Near-real-time incremental indexing: the package's one segment store.
 
 The reference's NRT model (SURVEY.md §2.8): flushed-but-uncommitted segments
 become visible to new searchers via DirectoryReader.OpenIfChanged /
@@ -7,11 +7,15 @@ Index/StandardDirectoryReader.cs); ControlledRealTimeReopenThread bounds the
 visibility latency. Lucene has NO watermarks/event-time windows — the
 streaming surface is exactly "append docs, refresh searcher".
 
-Spark mapping: a Structured Streaming query with foreachBatch appends each
-micro-batch as a segment through the same SegmentedIndexWriter machinery
+Spark mapping: `IncrementalIndexer.process_batch` flushes one DataFrame as
+one segment — parquet postings + doclens under ``segments/seg_<id>/`` —
+and then lists it in ``segments.json``, whose atomic rename is the commit
+(segments_N). It is usable as a Structured Streaming foreachBatch sink
 (micro-batch == flush; checkpointLocation == commit point; trigger interval
-== ControlledRealTimeReopenThread's targetMaxStaleSec). `refresh()` returns
-a searcher over all committed segments — MaybeRefresh.
+== ControlledRealTimeReopenThread's targetMaxStaleSec). `maybe_merge` is
+the tiered merge, `refresh()` returns a searcher over all committed
+segments — MaybeRefresh. The bulk `index.segments.SegmentedIndexWriter`
+writes its doc-range segments through this same store.
 """
 
 from __future__ import annotations
@@ -26,6 +30,43 @@ from pyspark.sql import functions as F
 from lucenenet_spark.analysis.analyzers import StandardAnalyzer
 from lucenenet_spark.index.builder import InvertedIndex, build_index
 from lucenenet_spark.search.searcher import IndexSearcher
+
+
+def read_json(path: str, default):
+    """The JSON document at `path`, or `default` when it does not exist."""
+    if not os.path.exists(path):
+        return default
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Replace `path` with `obj` as JSON in one rename: a reader sees the old
+    document or the new one, never a torn write (segments_N commit)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
+
+
+def segment_key(batch_id: int) -> str:
+    return f"seg_{batch_id:08d}"
+
+
+def sum_rows(rows: list[dict]) -> dict:
+    """Collection totals over manifest rows: docs (maxDoc), the indexed
+    fields in first-seen order, and per-field sumTotalTermFreq."""
+    fields: list[str] = []
+    by_field: dict[str, int] = {}
+    for v in rows:
+        fields += [f for f in v["fields"] if f not in fields]
+        for f, s in v["sum_ttf_by_field"].items():
+            by_field[f] = by_field.get(f, 0) + int(s)
+    return {
+        "docs": sum(v["docs"] for v in rows),
+        "fields": fields,
+        "sum_ttf_by_field": by_field,
+    }
 
 
 class IncrementalIndexer:
@@ -55,16 +96,10 @@ class IncrementalIndexer:
         return os.path.join(self.out_dir, "segments.json")
 
     def _load_manifest(self) -> dict[str, dict]:
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        return {}
+        return read_json(self._manifest_path, {})
 
     def _commit_manifest(self, m: dict[str, dict]) -> None:
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self._manifest_path)  # atomic — segments_N rename
+        write_json_atomic(self._manifest_path, m)
 
     # ------------------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -72,26 +107,30 @@ class IncrementalIndexer:
 
         Idempotent per batch_id (foreachBatch may replay a batch after
         failure): an already-committed segment id is skipped — this plus
-        the streaming checkpoint gives exactly-once index contents."""
-        key = f"seg_{batch_id:08d}"
+        the streaming checkpoint gives exactly-once index contents.
+
+        The batch is tokenized once: build_index caches the postings while
+        collecting the collection stats, and both parquet writes read that
+        cache, which is released before the manifest commit."""
+        key = segment_key(batch_id)
         manifest = self._load_manifest()
         if manifest.get(key, {}).get("status") == "committed":
             return
         t0 = time.time()
         idx = build_index(
             batch_df, text_col=self.text_col, id_col=self.id_col, analyzer=self.analyzer,
-            persist=False,
         )
         seg_dir = os.path.join(self.out_dir, "segments", key)
-        idx.postings.write.mode("overwrite").parquet(os.path.join(seg_dir, "postings"))
-        idx.doclens.write.mode("overwrite").parquet(os.path.join(seg_dir, "doclens"))
+        try:
+            idx.postings.write.mode("overwrite").parquet(os.path.join(seg_dir, "postings"))
+            idx.doclens.write.mode("overwrite").parquet(os.path.join(seg_dir, "doclens"))
+        finally:
+            idx.unpersist()
         manifest[key] = {
             "status": "committed",
             "docs": idx.max_doc,
-            "sum_ttf": idx.sum_ttf,
             "fields": list(idx.fields),
-            "sum_ttf_by_field": idx.sum_ttf_by_field
-            or {idx.default_field: idx.sum_ttf},
+            "sum_ttf_by_field": idx.sum_ttf_by_field,
             "wall_sec": round(time.time() - t0, 4),
         }
         self._commit_manifest(manifest)
@@ -160,20 +199,9 @@ class IncrementalIndexer:
         doclens.write.mode("overwrite").parquet(os.path.join(merged_dir, "doclens"))
         for k, _ in victims:
             del manifest[k]
-        merged_by_field: dict[str, int] = {}
-        merged_fields: list[str] = []
-        for _, v in victims:
-            for f, s in v.get("sum_ttf_by_field", {"text": v["sum_ttf"]}).items():
-                merged_by_field[f] = merged_by_field.get(f, 0) + int(s)
-            for f in v.get("fields", ["text"]):
-                if f not in merged_fields:
-                    merged_fields.append(f)
         manifest[merged_key] = {
             "status": "committed",
-            "docs": sum(v["docs"] for _, v in victims),
-            "sum_ttf": sum(v["sum_ttf"] for _, v in victims),
-            "fields": merged_fields,
-            "sum_ttf_by_field": merged_by_field,
+            **sum_rows([v for _, v in victims]),
             "wall_sec": 0.0,
             "merged_from": [k for k, _ in victims],
         }
@@ -222,24 +250,17 @@ class IncrementalIndexer:
         term_stats = postings.groupBy("field", "term").agg(
             F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf")
         )
-        by_field: dict[str, int] = {}
-        fields: list[str] = []
-        for k in keys:
-            v = manifest[k]
-            for f, s in v.get("sum_ttf_by_field", {"text": v["sum_ttf"]}).items():
-                by_field[f] = by_field.get(f, 0) + int(s)
-            for f in v.get("fields", ["text"]):
-                if f not in fields:
-                    fields.append(f)
+        tot = sum_rows([manifest[k] for k in keys])
+        by_field = tot["sum_ttf_by_field"]
         idx = InvertedIndex(
             postings=postings,
             doclens=doclens,
             term_stats=term_stats,
-            max_doc=sum(manifest[k]["docs"] for k in keys),
-            sum_ttf=sum(manifest[k]["sum_ttf"] for k in keys),
+            max_doc=tot["docs"],
+            sum_ttf=by_field.get(tot["fields"][0], 0),
             analyzer=self.analyzer,
-            fields=tuple(fields) or ("text",),
-            sum_ttf_by_field=by_field or None,
+            fields=tuple(tot["fields"]),
+            sum_ttf_by_field=by_field,
         )
         return IndexSearcher(idx)
 
@@ -284,24 +305,15 @@ class SnapshotDeletionPolicy:
         NEVER recycled (the reference never reuses a commit generation;
         reuse would let a replica mistake a new revision for one it
         already synced)."""
-        if os.path.exists(self._path):
-            with open(self._path) as f:
-                return json.load(f)
-        return {"next_gen": 0, "snaps": {}}
+        return read_json(self._path, {"next_gen": 0, "snaps": {}})
 
     def _load(self) -> dict[str, list[str]]:
         return self._load_state()["snaps"]
 
-    def _commit_state(self, state: dict) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1)
-        os.replace(tmp, self._path)
-
     def _commit(self, snaps: dict[str, list[str]]) -> None:
         state = self._load_state()
         state["snaps"] = snaps
-        self._commit_state(state)
+        write_json_atomic(self._path, state)
 
     # ------------------------------------------------------------------
     def snapshot(self) -> str:
@@ -315,7 +327,7 @@ class SnapshotDeletionPolicy:
         sid = f"snap_{state['next_gen']:08d}"
         state["next_gen"] += 1
         state["snaps"][sid] = list(keys)
-        self._commit_state(state)
+        write_json_atomic(self._path, state)
         return sid
 
     def get_snapshot(self, sid: str) -> tuple[str, ...]:
@@ -344,13 +356,8 @@ class SnapshotDeletionPolicy:
         """Durable pin set for an index directory, readable WITHOUT a
         policy instance — maybe_merge consults this so pins persist
         across processes (the Persistent variant's whole point)."""
-        path = os.path.join(out_dir, "snapshots.json")
-        out: set[str] = set()
-        if os.path.exists(path):
-            with open(path) as f:
-                for keys in json.load(f).get("snaps", {}).values():
-                    out.update(keys)
-        return out
+        state = read_json(os.path.join(out_dir, "snapshots.json"), {})
+        return {k for keys in state.get("snaps", {}).values() for k in keys}
 
     # ------------------------------------------------------------------
     def rollback(self, sid: str) -> None:

@@ -1,4 +1,4 @@
-"""Segmented build: crash/resume via lineage, merge parity with direct build
+"""Segmented build: crash/resume via the segments.json manifest, merge parity with direct build
 (the CheckIndex-style invariants + two-phase-commit behavior)."""
 
 import pytest
@@ -51,3 +51,22 @@ def test_metrics_emitted(spark, corpus_df, out_dir):
     assert m["docs"] == corpus_df.count()
     assert m["docs_per_sec"] > 0
     assert m["postings"] > 0 and m["bytes"] > 0
+
+
+def _persisted_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_build_and_flush_release_cached_postings(spark, corpus_df, tmp_path):
+    """Each segment flush caches its postings once for the stats collect
+    and both parquet writes; the cache must be released afterwards."""
+    from lucenenet_spark.streaming import IncrementalIndexer
+
+    docs = corpus_df.filter("doc_id < 20")
+    before = _persisted_rdds(spark)
+    SegmentedIndexWriter(out_dir=str(tmp_path / "seg"), num_segments=2).build(docs)
+    assert _persisted_rdds(spark) <= before
+
+    before = _persisted_rdds(spark)
+    IncrementalIndexer(str(tmp_path / "nrt")).process_batch(docs, 0)
+    assert _persisted_rdds(spark) <= before

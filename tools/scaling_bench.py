@@ -60,8 +60,9 @@ corpus.count()  # warm the cache: generation/read excluded from the timed build
 # JVM/worker cold start — is what the N-vs-4N comparison must measure;
 # at small corpus sizes the ~5 s fixed spawn cost otherwise swamps the
 # scalable compute and reads as fake non-scaling.
-_warm = build_index(corpus, text_col="text", id_col="doc_id", persist=False)
+_warm = build_index(corpus, text_col="text", id_col="doc_id")
 _warm.postings.count(); _warm.doclens.count(); _warm.term_stats.count()
+_warm.unpersist()
 
 t0 = time.time()
 idx = build_index(corpus, text_col="text", id_col="doc_id")
