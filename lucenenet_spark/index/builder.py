@@ -2,21 +2,28 @@
 
 The write path (reference trace: IndexWriter.AddDocument ->
 DocumentsWriterPerThread -> FreqProxTermsWriter -> flush; SURVEY.md §3.1)
-collapses into one declarative job:
+collapses into one corpus scan whose output is cached and read three ways:
 
-    corpus --mapInPandas(tokenize)--> tokens(doc_id, term, pos)
-           --groupBy(doc_id, term)--> postings rows (tf, positions)
-           --join doclens----------> postings + denormalized (dl, norm_byte)
-    tokens --groupBy(doc_id)-------> doclens (field length -> SmallFloat byte)
-    postings --groupBy(term)-------> term_stats (df, ttf)
+    corpus --mapInArrow(tokenize + invert)--> inverted rows (cached):
+        one row per (field, term, doc): tf, positions, dl, norm_byte
+        one doc row per (doc, field):   term NULL, tf 0, dl, norm_byte
+    inverted --term IS NOT NULL----> postings
+    inverted --term IS NULL--------> doclens (doc_id, field, dl, norm_byte)
+    doclens  --groupBy(field)------> maxDoc, sumTotalTermFreq (one collect)
+    postings --groupBy(field, term)--> term_stats (df, ttf)
+
+Like DocInverterPerField, the loop that inverts a field's tokens also
+measures the field's length and its norm; nothing re-counts the corpus
+or joins it back to the postings.
 
 Scale design (10^12 docs):
-- `groupBy(doc_id, term)` groups are bounded by document length — never
-  skewed, regardless of term frequency distribution.
-- `term_stats` uses only count/sum aggregates, so Spark's partial (map-side)
-  aggregation absorbs heavy terms; we never `collect_list` an entire term's
-  postings into one task (the skew trap the reference avoids with
-  per-thread segment writers + merges).
+- The inversion is complete within each Arrow batch (a document's tokens
+  never cross a partition boundary), so postings and doclens need no
+  shuffle at all.
+- `term_stats` and the collection totals use only count/sum aggregates,
+  so Spark's partial (map-side) aggregation absorbs heavy terms; we never
+  `collect_list` an entire term's postings into one task (the skew trap
+  the reference avoids with per-thread segment writers + merges).
 - Norms (`norm_byte`) are denormalized into posting rows at build time:
   queries then score without a postings⋈doclens join (Lucene reads norms
   from a per-segment sidecar file — .nvd — which is the same denorm idea).
@@ -59,14 +66,21 @@ def _inverter_map(
     analyzers: dict[str, StandardAnalyzer], id_col: str, with_positions: bool,
     with_payloads: bool = False,
 ):
-    """mapInArrow: corpus batches -> FULLY INVERTED posting rows.
+    """mapInArrow: corpus batches -> FULLY INVERTED posting rows, plus one
+    doc row per (doc, field).
 
     The DWPT insight (reference Index/DocumentsWriterPerThread.cs): a
     document's tokens never cross a partition boundary, so the per-(doc,
     term) aggregation — tf, sorted positions, field length, quantized norm
     (NormsConsumerPerField.cs:56) — is complete within the Arrow batch.
-    The index build therefore needs NO shuffle at all for the postings
-    table; only the (small-output) term_stats/doclens aggregations shuffle.
+    Neither postings nor doclens need a shuffle; only the (small-output)
+    term_stats and per-field totals aggregations do.
+
+    Doc rows carry `term` NULL, `tf` 0, NULL positions/payloads and the
+    field's `dl`/`norm_byte`. Every input row yields one per field,
+    token-free rows (NULL, empty or stopword-only text) included: dl=0 and
+    the norm of length 0 (the missing-norms contract), so doclens, maxDoc
+    and sumTotalTermFreq all come from this one pass.
 
     Multi-field: `analyzers` maps each indexed column to its analyzer
     (per-field analysis a la PerFieldAnalyzerWrapper). One corpus scan
@@ -97,12 +111,14 @@ def _inverter_map(
         arrow_fields.append(pa.field("payloads", pa.list_(pa.float32())))
     arrow_fields += [pa.field("dl", pa.int32()), pa.field("norm_byte", pa.int32())]
     out_schema = pa.schema(arrow_fields)
+    list_types = [f.type for f in arrow_fields if f.name in ("positions", "payloads")]
 
     def invert(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
+            n_rows = batch.num_rows
             doc_ids = batch.column(batch.schema.get_field_index(id_col)).to_numpy(
                 zero_copy_only=False
-            )
+            ).astype(np.int64)
             for fld, analyzer in analyzers.items():
                 text_arr = batch.column(batch.schema.get_field_index(fld))
                 routing = getattr(analyzer, "routing_col", None)
@@ -135,11 +151,21 @@ def _inverter_map(
                     codes_np, uniques = pd.factorize(pd.Series(terms), sort=False)
                     codes = codes_np.astype(np.int64)
                     dictionary = pa.array(np.asarray(uniques, dtype=object), type=pa.string())
+                field_lens = np.asarray(field_lens, dtype=np.int32)
                 norm_bytes = encode_norm(field_lens).astype(np.int32)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.repeat(fld, n_rows),
+                        pa.nulls(n_rows, pa.string()),
+                        pa.array(doc_ids, type=pa.int64()),
+                        pa.array(np.zeros(n_rows, dtype=np.int32), type=pa.int32()),
+                        *[pa.nulls(n_rows, t) for t in list_types],
+                        pa.array(field_lens, type=pa.int32()),
+                        pa.array(norm_bytes, type=pa.int32()),
+                    ],
+                    schema=out_schema,
+                )
                 if len(codes) == 0:
-                    yield pa.RecordBatch.from_pydict(
-                        {f.name: [] for f in arrow_fields}, schema=out_schema
-                    )
                     continue
                 # stable sort by (row, code); positions stay ascending per group
                 order = np.lexsort((codes, row_idx))
@@ -152,13 +178,10 @@ def _inverter_map(
                 term_arr = dictionary.take(pa.array(c_s[starts], type=pa.int64()))
                 if isinstance(term_arr, pa.ChunkedArray):
                     term_arr = term_arr.combine_chunks()
-                n_groups = len(starts)
                 cols = [
-                    pa.DictionaryArray.from_arrays(
-                        pa.array(np.zeros(n_groups, dtype=np.int32)), pa.array([fld])
-                    ).cast(pa.string()),
+                    pa.repeat(fld, len(starts)),
                     term_arr,
-                    pa.array(doc_ids[g_rows].astype(np.int64), type=pa.int64()),
+                    pa.array(doc_ids[g_rows], type=pa.int64()),
                     pa.array(counts.astype(np.int32), type=pa.int32()),
                 ]
                 if with_positions:
@@ -182,8 +205,8 @@ def _inverter_map(
                         )
                     )
                 cols += [
-                    pa.array(field_lens[g_rows].astype(np.int32), type=pa.int32()),
-                    pa.array(norm_bytes[g_rows].astype(np.int32), type=pa.int32()),
+                    pa.array(field_lens[g_rows], type=pa.int32()),
+                    pa.array(norm_bytes[g_rows], type=pa.int32()),
                 ]
                 yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
@@ -203,12 +226,14 @@ class InvertedIndex:
     doclens: DataFrame  # doc_id, field, dl, norm_byte
     term_stats: DataFrame  # field, term, df, ttf
     max_doc: int
-    sum_ttf: int  # default field's sumTotalTermFreq (back-compat accessor)
+    sum_ttf_by_field: dict[str, int]  # per-field sumTotalTermFreq
     analyzer: StandardAnalyzer = field(default_factory=StandardAnalyzer)
     fields: tuple[str, ...] = ("text",)
-    sum_ttf_by_field: dict[str, int] | None = None  # None -> {default: sum_ttf}
     analyzers: dict[str, StandardAnalyzer] | None = None  # per-field override
     n_terms: int | None = None  # dictionary size; persisted by save(), else counted once
+    # the cached inverter output postings and doclens are filtered from
+    # (build_index only); cache()/unpersist() act on it instead of the views
+    _inverted: DataFrame | None = field(default=None, init=False, repr=False, compare=False)
 
     def count_terms(self) -> int:
         """Dictionary row count, memoized ON THE INDEX so the many
@@ -232,8 +257,12 @@ class InvertedIndex:
     def _sttf(self, fld: str) -> int:
         """sumTotalTermFreq for one field (CollectionStatistics is
         per-field in the reference: IndexSearcher.cs:1129-1154)."""
-        d = self.sum_ttf_by_field or {self.default_field: self.sum_ttf}
-        return int(d.get(fld, 0))
+        return int(self.sum_ttf_by_field.get(fld, 0))
+
+    @property
+    def sum_ttf(self) -> int:
+        """The default field's sumTotalTermFreq."""
+        return self._sttf(self.default_field)
 
     def avgdl_for(self, fld: str) -> float:
         """float32(sumTotalTermFreq(field) / (double) maxDoc) —
@@ -262,17 +291,23 @@ class InvertedIndex:
         default field's slice covers every doc exactly once)."""
         return self.doclens.filter(F.col("field") == self.default_field).select("doc_id")
 
+    def _tables(self) -> list[DataFrame]:
+        """The relations cache()/unpersist() manage: a built index's one
+        inverter output (postings and doclens are filters over it), else
+        postings and doclens themselves; term_stats either way."""
+        if self._inverted is not None:
+            return [self._inverted, self.term_stats]
+        return [self.postings, self.doclens, self.term_stats]
+
     def cache(self) -> "InvertedIndex":
-        self.postings.cache()
-        self.doclens.cache()
-        self.term_stats.cache()
+        for df in self._tables():
+            df.cache()
         return self
 
     def unpersist(self) -> "InvertedIndex":
         """Release the cached index tables (IndexReader.close analogue)."""
-        self.postings.unpersist()
-        self.doclens.unpersist()
-        self.term_stats.unpersist()
+        for df in self._tables():
+            df.unpersist()
         return self
 
     # ------------------------------------------------------------------
@@ -330,10 +365,8 @@ class InvertedIndex:
             json.dump(
                 {
                     "max_doc": self.max_doc,
-                    "sum_ttf": self.sum_ttf,
                     "fields": list(self.fields),
-                    "sum_ttf_by_field": self.sum_ttf_by_field
-                    or {self.default_field: self.sum_ttf},
+                    "sum_ttf_by_field": self.sum_ttf_by_field,
                     # persisted so a loaded index's first query never runs
                     # a full dictionary count (searcher dict-vs-pushdown
                     # decision reads it)
@@ -351,12 +384,9 @@ class InvertedIndex:
             doclens=spark.read.parquet(os.path.join(path, "doclens")),
             term_stats=spark.read.parquet(os.path.join(path, "term_stats")),
             max_doc=stats["max_doc"],
-            sum_ttf=stats["sum_ttf"],
+            sum_ttf_by_field={k: int(v) for k, v in stats["sum_ttf_by_field"].items()},
             analyzer=analyzer or StandardAnalyzer(),
             fields=tuple(stats.get("fields", ["text"])),
-            sum_ttf_by_field={
-                k: int(v) for k, v in stats.get("sum_ttf_by_field", {}).items()
-            } or None,
             n_terms=(
                 int(stats["n_terms"]) if stats.get("n_terms") is not None else None
             ),
@@ -374,9 +404,13 @@ def build_index(
     """Tokenize + invert a corpus DataFrame into an InvertedIndex.
 
     One mapInArrow pass (tokenize, vectorized) inverts EVERY indexed field
-    in a single corpus scan; norms ride along from the tokenizer, so there
-    is no postings⋈doclens join; term_stats re-aggregates postings with
-    map-side partial count/sum (heavy terms never collect in one task).
+    in a single corpus scan and is cached. Its posting rows are
+    `postings`; its doc rows (one per (doc, field), norms from the
+    tokenizer) are `doclens`, so there is no corpus⋈postings join.
+    term_stats re-aggregates postings with map-side partial count/sum
+    (heavy terms never collect in one task); maxDoc and per-field
+    sumTotalTermFreq come from one groupBy(field) collect over doclens —
+    the build's only driver round-trip.
 
     `fields`: extra/alternative indexed columns — a list (all use
     `analyzer`) or a dict column->analyzer (PerFieldAnalyzerWrapper,
@@ -386,8 +420,8 @@ def build_index(
 
     `with_positions=False` mirrors IndexOptions.DOCS_AND_FREQS (drops the
     positions array; phrase queries then unavailable) — FieldInfo.cs:316-356.
-    Postings are cached (MEMORY_AND_DISK) since three downstream tables
-    derive from them; the caller releases them with `unpersist()`.
+    The inverter output is cached (MEMORY_AND_DISK) since every table
+    derives from it; the caller releases it with `unpersist()`.
     """
     analyzer = analyzer or StandardAnalyzer()
     if fields is None:
@@ -401,8 +435,12 @@ def build_index(
     with_payloads = any(
         getattr(a, "emits_payloads", False) for a in analyzers.values()
     )
+    # `term` is nullable here (doc rows); declared non-null, the optimizer
+    # would fold the IS [NOT] NULL filters below to constants
     schema_fields = [
-        f for f in POSTINGS_SCHEMA.fields if with_positions or f.name != "positions"
+        T.StructField("term", T.StringType(), True) if f.name == "term" else f
+        for f in POSTINGS_SCHEMA.fields
+        if with_positions or f.name != "positions"
     ]
     if with_payloads:
         at = next(
@@ -416,67 +454,45 @@ def build_index(
         {getattr(a, "routing_col", None) for a in analyzers.values()}
         - {None} - set(field_names)
     )
-    postings = corpus.select(
+    inverted = corpus.select(
         F.col(id_col).cast("long").alias("doc_id"),
         *[F.col(f).alias(f) for f in field_names],
         *[F.col(c).alias(c) for c in routing_cols],
     ).mapInArrow(
         _inverter_map(analyzers, "doc_id", with_positions, with_payloads), schema
     ).persist()
-
-    # every (doc, field) gets a doclens row, even token-free ones:
-    # dl=0, norm encodes 1/sqrt(0)=inf (missing-norms contract)
-    zero_norm = int(encode_norm(np.array([0], dtype=np.int64))[0])
-    doclens = (
-        corpus.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.explode(F.array(*[F.lit(f) for f in field_names])).alias("field"),
-        )
-        .join(
-            postings.groupBy("doc_id", "field").agg(
-                F.first("dl").alias("dl"), F.first("norm_byte").alias("norm_byte")
-            ),
-            ["doc_id", "field"],
-            "left",
-        )
-        .select(
-            "doc_id",
-            "field",
-            F.coalesce("dl", F.lit(0)).cast("int").alias("dl"),
-            F.coalesce("norm_byte", F.lit(zero_norm)).cast("int").alias("norm_byte"),
-        )
+    postings = inverted.filter(F.col("term").isNotNull())
+    doclens = inverted.filter(F.col("term").isNull()).select(
+        "doc_id", "field", "dl", "norm_byte"
     )
-
     term_stats = postings.groupBy("field", "term").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf")
     )
-
-    # Collection stats WITHOUT touching doclens: sumTotalTermFreq per field
-    # is the sum of each (doc, field)'s denormalized dl (token-free docs
-    # contribute 0, so postings alone determine it), and maxDoc is the
-    # corpus row count. The old doclens-based aggregate re-scanned the
-    # corpus and paid the corpus⋈postings join a second time in the build
-    # critical path (guide §2.4: remove shuffles outright).
-    totals = (
-        postings.groupBy("field", "doc_id")
-        .agg(F.first("dl").alias("dl"))
-        .groupBy("field")
-        .agg(F.sum("dl").alias("sttf"))
-        .collect()
-    )
-    by_field = {r["field"]: int(r["sttf"] or 0) for r in totals}
-    max_doc = corpus.count()
-    return InvertedIndex(
+    max_doc, by_field = collection_totals(doclens)
+    idx = InvertedIndex(
         postings=postings,
         doclens=doclens,
         term_stats=term_stats,
         max_doc=max_doc,
-        sum_ttf=by_field.get(field_names[0], 0),
+        sum_ttf_by_field=by_field,
         analyzer=analyzer,
         fields=tuple(field_names),
-        sum_ttf_by_field=by_field,
         analyzers=analyzers if len(field_names) > 1 else None,
     )
+    idx._inverted = inverted
+    return idx
+
+
+def collection_totals(doclens: DataFrame) -> tuple[int, dict[str, int]]:
+    """(maxDoc, {field: sumTotalTermFreq}) from doclens in one groupBy
+    (field) count/sum collect. Every doc has one doclens row per field,
+    so a field's row count is maxDoc and the sum of its dl is its
+    sumTotalTermFreq (token-free docs add 0)."""
+    rows = doclens.groupBy("field").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sttf")
+    ).collect()
+    by_field = {r["field"]: int(r["sttf"] or 0) for r in rows}
+    return max((int(r["n"]) for r in rows), default=0), by_field
 
 
 def assign_doc_ids(df: DataFrame, order_col: str = "url", num_partitions: int | None = None) -> DataFrame:
@@ -586,17 +602,15 @@ def add_indexes(*indexes: InvertedIndex) -> InvertedIndex:
     max_doc = sum(ix.max_doc for ix in indexes)
     by_field: dict[str, int] = {}
     for ix in indexes:
-        d = ix.sum_ttf_by_field or {ix.default_field: ix.sum_ttf}
-        for k, v in d.items():
+        for k, v in ix.sum_ttf_by_field.items():
             by_field[k] = by_field.get(k, 0) + int(v)
     return InvertedIndex(
         postings=postings,
         doclens=doclens,
         term_stats=term_stats,
         max_doc=max_doc,
-        sum_ttf=by_field.get(fields[0], 0),
+        sum_ttf_by_field=by_field,
         analyzer=first.analyzer,
         fields=fields,
-        sum_ttf_by_field=by_field,
         analyzers=first.analyzers,
     )

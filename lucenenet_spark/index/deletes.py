@@ -12,7 +12,8 @@ Spark mapping:
   deleted doc set, STATS UNCHANGED -> matches Lucene's pre-merge scoring
   (same idf/avgdl, deleted docs just stop matching).
 - expunge_deletes(index): ForceMergeDeletes analogue — recompute
-  term_stats/max_doc/sum_ttf from the surviving postings so stats reflect
+  term_stats/max_doc/sumTotalTermFreq from the surviving postings and
+  doclens (`collection_totals`, shared with build_index) so stats reflect
   only live docs (what a full merge produces).
 """
 
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import InvertedIndex
+from lucenenet_spark.index.builder import InvertedIndex, collection_totals
 
 
 def apply_deletes(index: InvertedIndex, deleted: DataFrame) -> InvertedIndex:
@@ -33,10 +34,9 @@ def apply_deletes(index: InvertedIndex, deleted: DataFrame) -> InvertedIndex:
         doclens=index.doclens.join(dels, "doc_id", "left_anti"),
         term_stats=index.term_stats,  # stats unchanged until merge
         max_doc=index.max_doc,
-        sum_ttf=index.sum_ttf,
+        sum_ttf_by_field=index.sum_ttf_by_field,
         analyzer=index.analyzer,
         fields=index.fields,
-        sum_ttf_by_field=index.sum_ttf_by_field,
         analyzers=index.analyzers,
     )
 
@@ -58,19 +58,14 @@ def expunge_deletes(index: InvertedIndex) -> InvertedIndex:
     term_stats = index.postings.groupBy("field", "term").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf")
     )
-    totals = index.doclens.groupBy("field").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sttf")
-    ).collect()
-    by_field = {r["field"]: int(r["sttf"] or 0) for r in totals}
-    max_doc = max((int(r["n"]) for r in totals), default=0)
+    max_doc, by_field = collection_totals(index.doclens)
     return InvertedIndex(
         postings=index.postings,
         doclens=index.doclens,
         term_stats=term_stats,
         max_doc=max_doc,
-        sum_ttf=by_field.get(index.default_field, 0),
+        sum_ttf_by_field=by_field,
         analyzer=index.analyzer,
         fields=index.fields,
-        sum_ttf_by_field=by_field,
         analyzers=index.analyzers,
     )

@@ -67,9 +67,8 @@ def parallel_reader(*indexes: InvertedIndex) -> InvertedIndex:
         doclens=doclens,
         term_stats=term_stats,
         max_doc=first.max_doc,
-        sum_ttf=sttf[fields[0]],
+        sum_ttf_by_field=sttf,
         analyzer=first.analyzer,
         fields=tuple(fields),
-        sum_ttf_by_field=sttf,
         analyzers=analyzers,
     )

@@ -41,10 +41,9 @@ def split_index(
         doclens=index.doclens.filter(pred),
         term_stats=index.term_stats,  # rebuilt below
         max_doc=index.max_doc,
-        sum_ttf=index.sum_ttf,
+        sum_ttf_by_field=index.sum_ttf_by_field,
         analyzer=index.analyzer,
         fields=index.fields,
-        sum_ttf_by_field=index.sum_ttf_by_field,
         analyzers=index.analyzers,
     )
     return expunge_deletes(filtered)
@@ -70,10 +69,9 @@ def pk_split_index(index: InvertedIndex, pred) -> tuple[InvertedIndex, InvertedI
                 doclens=index.doclens.filter(p),
                 term_stats=index.term_stats,  # rebuilt by expunge
                 max_doc=index.max_doc,
-                sum_ttf=index.sum_ttf,
+                sum_ttf_by_field=index.sum_ttf_by_field,
                 analyzer=index.analyzer,
                 fields=index.fields,
-                sum_ttf_by_field=index.sum_ttf_by_field,
                 analyzers=index.analyzers,
             )
         )

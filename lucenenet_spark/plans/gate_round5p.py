@@ -154,10 +154,10 @@ def replica_term_query(spark, sf_dir):
 
 
 # ==========================================================================
-# Two-phase commit + crash/resume (SegmentedIndexWriter lineage —
-# IndexWriter.cs two-phase commit, segments_N atomic rename): the build
-# "crashes" after 2 of 4 segments, RESUMES (committed segments skipped,
-# their lineage rows byte-untouched), merges term-sharded, and the
+# Two-phase commit + crash/resume (SegmentedIndexWriter's segments.json
+# manifest — IndexWriter.cs two-phase commit, segments_N atomic rename):
+# the build "crashes" after 2 of 4 segments, RESUMES (committed segments
+# skipped, their manifest rows byte-untouched), merges term-sharded, and the
 # served top-k must equal the one-shot full-corpus oracle. Previously
 # pytest-only (test_segments.py); this puts the resume path under the
 # DuckDB gate like every other load-bearing path.

@@ -1123,7 +1123,7 @@ def preretrieval_qpp(index, terms: list[str], field: str | None = None) -> DataF
         raise ValueError("terms must be a non-empty list of distinct terms")
     fld = field or index.default_field
     n = float(index.max_doc)
-    c_tokens = float((index.sum_ttf_by_field or {index.default_field: index.sum_ttf})[fld])
+    c_tokens = float(index.sum_ttf_by_field[fld])
     qdf = index.postings.sparkSession.createDataFrame([(t,) for t in terms], "term string")
     stats = (
         index.term_stats.filter((F.col("field") == fld) & F.col("term").isin(terms))

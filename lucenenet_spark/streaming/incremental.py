@@ -109,9 +109,9 @@ class IncrementalIndexer:
         failure): an already-committed segment id is skipped — this plus
         the streaming checkpoint gives exactly-once index contents.
 
-        The batch is tokenized once: build_index caches the postings while
-        collecting the collection stats, and both parquet writes read that
-        cache, which is released before the manifest commit."""
+        The batch is tokenized once: build_index caches the inverter output
+        while collecting the collection stats, and both parquet writes read
+        that cache, which is released before the manifest commit."""
         key = segment_key(batch_id)
         manifest = self._load_manifest()
         if manifest.get(key, {}).get("status") == "committed":
@@ -251,16 +251,14 @@ class IncrementalIndexer:
             F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf")
         )
         tot = sum_rows([manifest[k] for k in keys])
-        by_field = tot["sum_ttf_by_field"]
         idx = InvertedIndex(
             postings=postings,
             doclens=doclens,
             term_stats=term_stats,
             max_doc=tot["docs"],
-            sum_ttf=by_field.get(tot["fields"][0], 0),
+            sum_ttf_by_field=tot["sum_ttf_by_field"],
             analyzer=self.analyzer,
             fields=tuple(tot["fields"]),
-            sum_ttf_by_field=by_field,
         )
         return IndexSearcher(idx)
 

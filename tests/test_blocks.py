@@ -5,14 +5,13 @@ pruning-safety contract: top-k with pruning == top-k without)."""
 import numpy as np
 import pytest
 
-from lucenenet_spark import IndexSearcher, TermQuery, build_index
+from lucenenet_spark import BlockIndexSearcher, IndexSearcher, TermQuery, build_index
 from lucenenet_spark.index.blocks import (
     pack_postings,
     unpack_blocks,
     varint_decode,
     varint_encode,
 )
-from lucenenet_spark.search.wand import BlockMaxSearcher
 
 
 def test_varint_roundtrip():
@@ -124,7 +123,7 @@ def test_block_metadata_bounds(packed_columnar):
 def test_wand_rank_identity(packed_columnar):
     idx, blocks = packed_columnar
     plain = IndexSearcher(idx)
-    bmw = BlockMaxSearcher(idx, blocks)
+    bmw = BlockIndexSearcher(idx, blocks)
     for term in ["w0000", "w0001", "w0042", "fox", "w0300"]:
         exp = [
             (r["doc_id"], r["score"]) for r in plain.search(TermQuery(term), 10).collect()
@@ -143,7 +142,7 @@ def test_wand_prunes_on_length_skewed_corpus(spark):
     idx = build_index(df).cache()
     blocks = pack_postings(idx.postings).cache()
     plain = IndexSearcher(idx)
-    bmw = BlockMaxSearcher(idx, blocks)
+    bmw = BlockIndexSearcher(idx, blocks)
     exp = [(r["doc_id"], r["score"]) for r in plain.search(TermQuery("hot"), 10).collect()]
     got = [(r["doc_id"], r["score"]) for r in bmw.topk_term("hot", 10).collect()]
     assert got == exp
